@@ -22,8 +22,10 @@ same string, are one node cluster.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -72,7 +74,9 @@ def _edge_checksum(edges: DataFrame):
 def _driver_components(edge_rows) -> list[tuple[str, str]]:
     """Union-find over a COLLECTED edge list; union-by-min-root, so each
     final root is the lexicographic minimum of its component — the same
-    semantics the distributed path produces."""
+    semantics the distributed path produces. Every endpoint becomes a
+    node, so a node whose only edges are self-loops is its own component
+    (and a null endpoint is a null node, as on the distributed path)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -84,12 +88,25 @@ def _driver_components(edge_rows) -> list[tuple[str, str]]:
     for src, dst in edge_rows:
         parent.setdefault(src, src)
         parent.setdefault(dst, dst)
+        if src is None or dst is None:
+            continue
         ra, rb = find(src), find(dst)
         if ra != rb:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    return sorted((n, find(n)) for n in parent)
+    return [(n, find(n)) for n in parent]
+
+
+def _local_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """A DataFrame over rows the driver holds. Built through Arrow it is a
+    LocalRelation: ``isLocal()`` is true, ``collect()`` runs no job, and
+    writing it runs no Python worker (a frame built from the list is a
+    Python RDD, about 3x slower to write)."""
+    struct = StructType.fromDDL(schema)
+    columns = list(zip(*rows)) or [()] * len(struct.fields)
+    table = pa.table({f.name: pa.array(c) for f, c in zip(struct.fields, columns)})
+    return spark.createDataFrame(table, struct)
 
 
 def connected_components(
@@ -99,11 +116,14 @@ def connected_components(
     component = lexicographic min node id in the component.
 
     Adaptive, like Spark's own broadcast-vs-shuffle join choice: an edge
-    set at or under ``driver_threshold`` rows (the dictionary-bounded
-    graphs this engine builds — gazetteer aliases × linked surfaces) is
-    collected and solved with union-find in one driver pass, because a
-    distributed fixpoint on a tiny graph is pure scheduling overhead
-    (measured 4-7s for 8 edges vs <1s). Larger graphs run the alternating
+    set of at most ``driver_threshold`` distinct rows (self-loops count;
+    the dictionary-bounded graphs this engine builds — gazetteer aliases ×
+    linked surfaces) is collected and solved with union-find in one driver
+    pass, because a distributed fixpoint on a tiny graph is pure
+    scheduling overhead (measured 4-7s for 8 edges vs <1s). The node table
+    comes from that same collect, so the result is a local DataFrame
+    (``isLocal()``) that no longer references ``edges``: reading it never
+    re-runs the edge pipeline. Larger graphs run the alternating
     large-star/small-star loop (Kiveris et al., "Connected Components in
     MapReduce and Beyond"): converges in O(log²) rounds of the component
     diameter — a 40-hop chain collapses in ~6 rounds where plain
@@ -111,21 +131,17 @@ def connected_components(
     implementation here). ``localCheckpoint`` truncates lineage each round;
     convergence = unchanged (count, hash-sum) edge checksum."""
     spark = edges.sparkSession
-    e0 = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
+    e_all = edges.select("src", "dst").distinct()
     # ONE job decides the path and feeds the fast path: collect at most
     # threshold+1 rows — if the limit wasn't hit we already hold the whole
-    # edge set (a separate count() would re-run the distinct shuffle)
-    probe = e0.limit(driver_threshold + 1).collect()
+    # edge set (a separate count() would re-run the distinct shuffle), and
+    # with self-loops kept in it, every node too
+    probe = e_all.limit(driver_threshold + 1).collect()
     if len(probe) <= driver_threshold:
-        rows = _driver_components([(r.src, r.dst) for r in probe])
-        # isolated self-loop-only nodes still appear in the node table
-        solo = edges.select(F.col("src").alias("node")).union(
-            edges.select(F.col("dst").alias("node"))
-        ).distinct()
-        comp = spark.createDataFrame(rows, "node string, component string")
-        return solo.join(comp, "node", "left").select(
-            "node", F.coalesce("component", F.col("node")).alias("component")
+        return _local_frame(
+            spark, _driver_components(probe), "node string, component string"
         )
+    e0 = e_all.where(F.col("src") != F.col("dst"))
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -234,17 +250,30 @@ def merge_graph_edges(existing: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def canonicalize(
-    triples: DataFrame, linked_mentions: DataFrame, max_iter: int = 25
-) -> tuple[DataFrame, DataFrame]:
-    """→ (entity_nodes, triples with canonical arg entity ids).
+def _entity_node_rows(comp_rows) -> list[tuple]:
+    """(node, component) rows → (canonical_id, member, is_kb_entity): the
+    canonical id is the smallest KB entity id (``e:`` prefix stripped) in
+    the component, else the component id itself, which is already its
+    smallest member."""
+    kb_min: dict[str, str] = {}
+    for node, comp in comp_rows:
+        if node is not None and node.startswith("e:"):
+            kb = node[2:]
+            if comp not in kb_min or kb < kb_min[comp]:
+                kb_min[comp] = kb
+    return [
+        (
+            kb_min.get(comp, comp),
+            node,
+            None if node is None else node.startswith("e:"),
+        )
+        for node, comp in comp_rows
+    ]
 
-    entity_nodes: one row per cluster member with its canonical cluster id
-    (min KB entity id in the component, falling back to min member).
-    """
-    edges = build_entity_edges(linked_mentions)
-    comps = connected_components(edges, max_iter)
 
+def _entity_nodes_distributed(comps: DataFrame) -> DataFrame:
+    """:func:`_entity_node_rows` as a groupBy + join, for components too
+    many to hold on the driver."""
     # canonical id per component: the smallest KB entity id if present
     canon = comps.groupBy("component").agg(
         F.min(F.when(F.col("node").startswith("e:"), F.expr("substring(node, 3)"))).alias(
@@ -255,14 +284,36 @@ def canonicalize(
         "component",
         F.coalesce("canonical_id", "_fallback").alias("canonical_id"),
     )
-    entity_nodes = (
-        comps.join(canon, "component")
-        .select(
-            "canonical_id",
-            F.col("node").alias("member"),
-            F.col("node").startswith("e:").alias("is_kb_entity"),
-        )
+    return comps.join(canon, "component").select(
+        "canonical_id",
+        F.col("node").alias("member"),
+        F.col("node").startswith("e:").alias("is_kb_entity"),
     )
+
+
+def canonicalize(
+    triples: DataFrame, linked_mentions: DataFrame, max_iter: int = 25
+) -> tuple[DataFrame, DataFrame]:
+    """→ (entity_nodes, triples with canonical arg entity ids).
+
+    entity_nodes: one row per cluster member with its canonical cluster id
+    (min KB entity id in the component, falling back to min member). When
+    the components come back driver-local (the dictionary-bounded case),
+    the ids are computed in Python and entity_nodes is a local DataFrame
+    too; otherwise it is a distributed groupBy + join over the components.
+    The triples are returned lazily.
+    """
+    edges = build_entity_edges(linked_mentions)
+    comps = connected_components(edges, max_iter)
+
+    if comps.isLocal():
+        entity_nodes = _local_frame(
+            comps.sparkSession,
+            _entity_node_rows(comps.collect()),
+            "canonical_id string, member string, is_kb_entity boolean",
+        )
+    else:
+        entity_nodes = _entity_nodes_distributed(comps)
 
     # mention surface → canonical id (broadcastable: bounded by dictionary
     # + distinct linked surfaces, tiny next to the triples table)

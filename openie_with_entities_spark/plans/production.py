@@ -7,8 +7,16 @@ a rerun reprocesses only buckets without lineage):
 
     transcripts ─► triples (fused extract + inline link)  [ckpt: triples]
         ├────────► entity_nodes (connected components)    [ckpt: entity_nodes]
+        ├────────► graph_edges (canonical entity pairs)   [ckpt: graph_edges]
         └────────► metrics (violation counters c1-c4 +    [ckpt: metrics]
                    per-stage row counts)
+
+The tail after the triples stage collects the dictionary-bounded entity
+edge set once; connected components and canonical ids are solved on the
+driver from that collect, so ``entity_nodes`` is written from rows the
+driver already holds (no second pass over the triples). The canonical
+rewrite of the triples' entity ids applies only ids that differ from
+their canonical id, and is skipped when none do.
 """
 
 from __future__ import annotations
@@ -89,16 +97,24 @@ def run_production(
     linked_mentions = link_mentions(mentions, alias)
     entity_nodes, _ = canonicalize(triples, linked_mentions)
     entity_path = os.path.join(out_dir, "entity_nodes")
-    entity_nodes.write.mode("overwrite").parquet(entity_path)
-    entity_nodes = spark.read.parquet(entity_path)
+    nodes_local = entity_nodes.isLocal()
+    if not nodes_local:
+        # star-loop components: write them now and read back what was
+        # written instead of re-running the fixpoint
+        entity_nodes.write.mode("overwrite").parquet(entity_path)
+        entity_nodes = spark.read.parquet(entity_path)
 
     # rewrite triple args to canonical cluster ids: KB entity id → its
-    # cluster's canonical id via a broadcast map (dictionary-bounded)
+    # cluster's canonical id. Only ids that change are rewritten; linking
+    # sends each surface to one entity, so every component is a star around
+    # one KB node and the map is usually empty — then the triples plan is
+    # left untouched.
     kb_to_canon = {
-        r.entity_id: r.canonical_id
+        r.member[2:]: r.canonical_id
         for r in entity_nodes.where(F.col("is_kb_entity"))
-        .select(F.expr("substring(member, 3)").alias("entity_id"), "canonical_id")
-        .collect()
+        .select("member", "canonical_id")
+        .collect()  # driver-held rows: no job when nodes_local
+        if r.member[2:] != r.canonical_id
     }
     if kb_to_canon:
         # dictionary-bounded → map literal (same regime as the link stage);
@@ -133,12 +149,19 @@ def run_production(
         "stage", F.lit("link")
     )
 
-    # The three tail writes only READ the (checkpointed) triples table and
-    # are independent of each other: submit them from a small thread pool
-    # so the later jobs' tasks back-fill executors idled by the earlier
-    # jobs' stragglers (guide §2.6 overlap; job order/results unchanged).
+    # The tail writes only READ the (checkpointed) triples table or rows the
+    # driver holds, and are independent of each other: submit them from a
+    # small thread pool so the later jobs' tasks back-fill executors idled
+    # by the earlier jobs' stragglers (guide §2.6 overlap; job
+    # order/results unchanged).
+    def _write_entities() -> None:
+        if nodes_local:  # else written above
+            entity_nodes.write.mode("overwrite").parquet(entity_path)
+
+    graph = materialize_graph(triples)
+
     def _write_graph() -> None:
-        materialize_graph(triples).write.mode("overwrite").parquet(graph_path)
+        graph.write.mode("overwrite").parquet(graph_path)
 
     def _write_metrics() -> None:
         violations.write.mode("overwrite").parquet(metrics_path)
@@ -156,19 +179,21 @@ def run_production(
 
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
+    with ThreadPoolExecutor(max_workers=4) as pool:
         futures = [
             pool.submit(f)
-            for f in (_write_graph, _write_metrics, _write_counters)
+            for f in (_write_graph, _write_metrics, _write_entities, _write_counters)
         ]
         for fut in futures:
             fut.result()  # surface the first failure, if any
 
+    # the schemas are known: reading with them skips a footer-inference job
+    # per table
     return ProductionResult(
         triples=triples,
-        entity_nodes=spark.read.parquet(entity_path),
-        graph_edges=spark.read.parquet(graph_path),
-        metrics=spark.read.parquet(metrics_path),
+        entity_nodes=spark.read.schema(entity_nodes.schema).parquet(entity_path),
+        graph_edges=spark.read.schema(graph.schema).parquet(graph_path),
+        metrics=spark.read.schema(violations.schema).parquet(metrics_path),
         buckets_processed=run.buckets_processed,
         buckets_skipped=run.buckets_skipped,
     )

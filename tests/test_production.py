@@ -38,15 +38,17 @@ def test_production_run_and_resume(spark, tmp_path):
     }
     assert used and used <= canon_ids
 
-    # resume: nothing recomputed, outputs stable. (r1's entity_nodes /
-    # metrics handles go stale here — overwrite-in-place outputs — so all
-    # r1 reads happen above; production reruns hand out fresh handles.)
+    # resume: nothing recomputed, outputs identical. r1's entity_nodes /
+    # graph_edges handles go stale when r2 overwrites those tables in
+    # place, so their rows are read first.
+    nodes1 = {tuple(r) for r in r1.entity_nodes.collect()}
+    graph1 = {tuple(r) for r in r1.graph_edges.collect()}
+    assert nodes1 and graph1
     r2 = run_production(spark, t, alias, out, n_buckets=8)
     assert r2.buckets_processed == 0 and r2.buckets_skipped == 8
     assert r2.triples.count() == n_triples
-    assert r2.entity_nodes.count() == len(
-        canon_ids
-    ) or r2.entity_nodes.count() > 0
+    assert {tuple(r) for r in r2.entity_nodes.collect()} == nodes1
+    assert {tuple(r) for r in r2.graph_edges.collect()} == graph1
 
 
 def test_stage_counters_written(spark, tmp_path):
@@ -85,6 +87,9 @@ def test_salted_link_mode_matches_inline(spark, tmp_path):
     ra = {tuple(r[c] for c in cols) for r in a.triples.select(cols).collect()}
     rb = {tuple(r[c] for c in cols) for r in b.triples.select(cols).collect()}
     assert ra == rb and ra
+    na = {tuple(r) for r in a.entity_nodes.collect()}
+    nb = {tuple(r) for r in b.entity_nodes.collect()}
+    assert na == nb and na
 
 
 def test_cli_smoke(tmp_path):
@@ -204,3 +209,23 @@ def test_merge_graph_edges_incremental_equals_full(spark):
         materialize_graph(spark.createDataFrame(new_evidence, ddl)),
     )
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, full.collect()))
+
+
+def _max_job_id(spark) -> int:
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()  # job-start events are posted async
+    jobs = sc.statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+
+def test_production_job_count(spark, tmp_path):
+    """Spark jobs one fresh run submits on a small corpus. A regression
+    here (a re-scan of the triples in the tail, a lost fusion) shows up as
+    extra jobs long before it shows up in wall time."""
+    t = generate_transcripts(spark, 20).cache()
+    t.count()
+    alias = alias_dict(spark)
+    before = _max_job_id(spark)
+    run_production(spark, t, alias, str(tmp_path / "kg"), n_buckets=4)
+    n_jobs = _max_job_id(spark) - before
+    assert n_jobs <= 26, n_jobs  # measured on this corpus
